@@ -31,9 +31,23 @@ import time
 from typing import Callable
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from fastqdedup_spark.config import DedupConfig
+
+
+def observed(obs: Observation) -> dict | None:
+    """The metrics of a `Dataset.observe` Observation, or None when its
+    job never ran: the observed plan was never built (a resumed stage
+    skips the build) or never executed. Unlike `Observation.get` it
+    never blocks, so it is safe inside `MetricsCollector.add_lazy`."""
+    jo = obs._jo
+    if jo is None:
+        return None
+    jrow = jo.getRowOrEmpty()
+    if jrow is None or (hasattr(jrow, "isEmpty") and jrow.isEmpty()):
+        return None
+    return obs.get
 
 
 class MetricsCollector:

@@ -139,16 +139,16 @@ def dissect_clusters(
         # branches trips the analyzer's duplicate-observation check.)
         from pyspark.sql import Observation
 
+        from fastqdedup_spark.checkpoint import observed
+
         obs = Observation()
         big_out = big_out.observe(
             obs, F.count(F.lit(1)).alias("fallback_clusters")
         )
 
         def _fallback_count():
-            jrow = obs._jo.getRowOrEmpty()
-            if jrow is None or (hasattr(jrow, "isEmpty") and jrow.isEmpty()):
-                return None
-            return float(obs.get["fallback_clusters"] or 0)
+            seen = observed(obs)
+            return None if seen is None else float(seen["fallback_clusters"] or 0)
 
         metrics.add_lazy("dissect", "fallback_clusters", _fallback_count)
         metrics.add("dissect", "max_cluster_size", max_cluster_size)

@@ -28,7 +28,7 @@ from dataclasses import dataclass, replace
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from fastqdedup_spark.checkpoint import StageCheckpointer
+from fastqdedup_spark.checkpoint import StageCheckpointer, observed
 from fastqdedup_spark.config import DedupConfig
 from fastqdedup_spark.functions.minhash import add_signature_columns, normalize_content
 from fastqdedup_spark.functions.quality import content_quality_filter
@@ -185,11 +185,10 @@ def dedup_files(
     )
     n_distinct = ck.metrics.as_dict().get("distinct.contents")
     if n_distinct is None:
-        # non-blocking probe (the add_lazy pattern): empty iff the
-        # stage was resumed, so build()/the observation never ran
-        jrow = n_obs._jo.getRowOrEmpty()
-        if jrow is not None and not (hasattr(jrow, "isEmpty") and jrow.isEmpty()):
-            n_distinct = n_obs.get["n"]
+        # None iff the stage was resumed, so the observation never ran
+        n_seen = observed(n_obs)
+        if n_seen is not None:
+            n_distinct = n_seen["n"]
     if n_distinct is None:
         n_distinct = distinct.count()
     # AUTO est_broadcast resolution (static per run): past

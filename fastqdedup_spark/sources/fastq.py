@@ -10,6 +10,12 @@ reference-equivalent dedup pipeline over real FASTQ files.
   record_idx and validates mate names (same name up to a trailing
   /1 /2 or read-number field). Ref: fastq_files_to_records,
   __init__.py:170-186 (raises on non-mates).
+- Parsed once: the parse is a Python pass over the whole file, so each
+  input table is pinned by an eager localCheckpoint, and so is the
+  zipped tuple table. The one-file-per-table guard and the mate check
+  are observed aggregates riding those same pin jobs, and every later
+  action (quality filter, dedup_keys, emission, write_fastq) reads the
+  pins — the reference reads each file once per pass, and so do we.
 - `deduplicate_fastq` = the whole reference CLI pipeline
   (__init__.py:209-288): quality filter -> key projection -> cluster ->
   dissect -> survivor first-wins emission, returning surviving records.
@@ -20,10 +26,12 @@ from __future__ import annotations
 import gzip
 import io
 import os
+from dataclasses import replace
+from urllib.parse import urlparse
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from fastqdedup_spark.config import DedupConfig
 from fastqdedup_spark.functions.quality import average_error_rate_udf
@@ -83,26 +91,38 @@ def _mate_root(name_col: str) -> F.Column:
     return F.regexp_replace(first, r"/[123]$", "")
 
 
-def zip_fastq(tables: list[DataFrame], validate: bool = True) -> DataFrame:
-    """Positional zip of parallel FASTQ tables -> one row per record
-    tuple with columns name_i/sequence_i/qualities_i. Raises ValueError
-    if any tuple's names are not mates (ref __init__.py:181-185).
+def _pin_input(df: DataFrame, i: int) -> tuple[DataFrame, str]:
+    """Parse table `i` once: pin it with an eager localCheckpoint and
+    return the pin plus its file name ("" without a file_name column).
+    The multi-file guard rides the pin job as an observed min/max of
+    file_name, so it costs no extra pass and raises before any join."""
+    if "file_name" not in df.columns:
+        return df.localCheckpoint(eager=True), ""
+    obs = Observation()
+    pinned = df.observe(
+        obs, F.min("file_name").alias("first"), F.max("file_name").alias("last")
+    ).localCheckpoint(eager=True)
+    first, last = obs.get["first"], obs.get["last"]
+    if first != last:
+        raise ValueError(
+            f"zip_fastq table {i} spans multiple files "
+            f"({first!r}, {last!r}, ...); pass "
+            f"one file per table — record_idx is per-file."
+        )
+    return pinned, first or ""
 
-    The positional join key is record_idx, which is only meaningful when
-    each table comes from exactly ONE file — a glob-read table repeats
-    record_idx per file and would cross-match records — so multi-file
-    tables are rejected up front."""
+
+def _zip_pinned(
+    tables: list[DataFrame], validate: bool = True
+) -> tuple[DataFrame, list[str]]:
+    """zip_fastq's body; also returns each table's file name (the
+    checkpoint identity deduplicate_fastq derives)."""
     out = None
+    names = []
     for i, df in enumerate(tables):
-        if "file_name" in df.columns:
-            nf = df.select("file_name").distinct().limit(2).collect()
-            if len(nf) > 1:
-                raise ValueError(
-                    f"zip_fastq table {i} spans multiple files "
-                    f"({nf[0].file_name!r}, {nf[1].file_name!r}, ...); pass "
-                    f"one file per table — record_idx is per-file."
-                )
-        renamed = df.select(
+        pinned, name = _pin_input(df, i)
+        names.append(name)
+        renamed = pinned.select(
             "record_idx",
             F.col("name").alias(f"name_{i}"),
             F.col("sequence").alias(f"sequence_{i}"),
@@ -110,22 +130,69 @@ def zip_fastq(tables: list[DataFrame], validate: bool = True) -> DataFrame:
         )
         out = renamed if out is None else out.join(renamed, "record_idx", "inner")
     assert out is not None
-    if validate and len(tables) > 1:
-        # ANY mate mismatching flags the tuple (OR, not chained AND
-        # filters — those only kept rows where EVERY mate mismatched,
-        # so a 3-file zip with file 3 out of sync but files 1-2 in
-        # sync validated clean). eqNullSafe so a null name (malformed
-        # record) is a mismatch, not a three-valued-logic pass.
-        mismatch = None
-        for i in range(1, len(tables)):
-            c = ~_mate_root("name_0").eqNullSafe(_mate_root(f"name_{i}"))
-            mismatch = c if mismatch is None else (mismatch | c)
-        bad = out.filter(mismatch).select("record_idx", "name_0").limit(1).collect()
-        if bad:
-            raise ValueError(
-                f"records at index {bad[0].record_idx} are not mates: {bad[0].name_0!r}"
-            )
-    return out
+    if len(tables) == 1:
+        return out, names
+    if not validate:
+        return out.localCheckpoint(eager=True), names
+    # ANY mate mismatching flags the tuple (OR, not chained AND
+    # filters — those only kept rows where EVERY mate mismatched,
+    # so a 3-file zip with file 3 out of sync but files 1-2 in
+    # sync validated clean). eqNullSafe so a null name (malformed
+    # record) is a mismatch, not a three-valued-logic pass.
+    mismatch = None
+    for i in range(1, len(tables)):
+        c = ~_mate_root("name_0").eqNullSafe(_mate_root(f"name_{i}"))
+        mismatch = c if mismatch is None else (mismatch | c)
+    obs = Observation()
+    out = out.observe(
+        obs, F.min(F.when(mismatch, F.struct("record_idx", "name_0"))).alias("bad")
+    ).localCheckpoint(eager=True)
+    bad = obs.get["bad"]
+    if bad is not None:
+        raise ValueError(
+            f"records at index {bad.record_idx} are not mates: {bad.name_0!r}"
+        )
+    return out, names
+
+
+def zip_fastq(tables: list[DataFrame], validate: bool = True) -> DataFrame:
+    """Positional zip of parallel FASTQ tables -> one row per record
+    tuple with columns name_i/sequence_i/qualities_i. Raises ValueError
+    if any tuple's names are not mates (ref __init__.py:181-185),
+    reporting the lowest such record_idx.
+
+    Each table is parsed exactly once: it is pinned by an eager
+    localCheckpoint, and the zipped tuples are pinned the same way, so
+    every later action reads the pins, never the raw files. Both guards
+    ride those pin jobs as observed aggregates. The positional join key
+    is record_idx, which is only meaningful when each table comes from
+    exactly ONE file — a glob-read table repeats record_idx per file
+    and would cross-match records — so a multi-file table is rejected
+    by its own pin job, before any join runs."""
+    return _zip_pinned(tables, validate)[0]
+
+
+def _identity(spark: SparkSession, name: str) -> str:
+    """Checkpoint identity of one input file. The name alone is not
+    enough: a file overwritten in place with different content keeps
+    its name and would silently resume the previous dataset's
+    checkpointed stages — so fold in size+mtime for local files, and
+    the metadata fingerprint (count|bytes) for remote ones, mirroring
+    input_fingerprint's approach for file tables. binaryFiles reports a
+    local file as `file:/abs/path` (one slash), so the name is parsed
+    as a URI rather than prefix-matched."""
+    if not name:
+        return ""
+    uri = urlparse(name)
+    if uri.scheme not in ("", "file"):
+        from fastqdedup_spark.sources import input_fingerprint
+
+        return input_fingerprint(name, spark)
+    try:
+        st = os.stat(uri.path)
+        return f"{name}|{st.st_size}|{st.st_mtime_ns}"
+    except OSError:
+        return name
 
 
 def deduplicate_fastq(
@@ -138,7 +205,10 @@ def deduplicate_fastq(
     """The reference CLI pipeline end-to-end (deduplicate_cluster,
     __init__.py:209-288): returns the surviving record tuples.
 
-    1. zip + validate (O2)
+    1. zip + validate (O2). Each input is parsed once and pinned, and
+       the zipped tuples are pinned too (see zip_fastq); the multi-file
+       and mate guards ride those pin jobs and raise before dedup_keys
+       writes any checkpoint stage. Every step below reads the pins.
     2. quality filter on the concat of ALL mates' qualities, sliced by
        the same check_slices as the dedup key (O3; ref __init__.py:243-250
        builds `joinfunc(record.qualities for record in record_tuple)` and
@@ -151,51 +221,23 @@ def deduplicate_fastq(
        against the RAW (pre-quality-filter) records, matching the
        reference's emission pass over the raw input files
     """
+    zipped_raw, names = _zip_pinned(tables)
     if cfg.checkpoint_dir and not cfg.input_id:
         # Bind checkpoints to THIS input (config.py's input_id
         # invariant: same knobs + different data must never resume
-        # each other's stages). Each table is single-file (zip_fastq
+        # each other's stages). Each table is single-file (the zip
         # enforces it), so the file names are a cheap, stable identity;
         # without them a wrong resume is silent survivor corruption,
         # so refuse rather than guess.
-        from dataclasses import replace
-
-        def _identity(name: str) -> str:
-            # name alone is not enough: a file overwritten in place
-            # with different content keeps its name and would silently
-            # resume the previous dataset's checkpointed stages (ADVICE
-            # r5) — fold size+mtime in for local files, and the
-            # metadata fingerprint (count|bytes) for remote ones,
-            # mirroring input_fingerprint's approach for file tables.
-            if not name:
-                return ""
-            if "://" in name and not name.startswith("file://"):
-                from fastqdedup_spark.sources import input_fingerprint
-
-                return input_fingerprint(name, spark)
-            p = name[len("file://"):] if name.startswith("file://") else name
-            try:
-                st = os.stat(p)
-                return f"{name}|{st.st_size}|{st.st_mtime_ns}"
-            except OSError:
-                return name
-
-        names = []
-        for df in tables:
-            if "file_name" in df.columns:
-                row = df.select("file_name").limit(1).collect()
-                names.append(_identity(row[0].file_name if row else ""))
-            else:
-                names.append("")
-        if not any(names):
+        ids = [_identity(spark, n) for n in names]
+        if not any(ids):
             raise ValueError(
                 "cfg.checkpoint_dir is set but the input tables carry no "
                 "file_name to derive a checkpoint identity from; set "
                 "cfg.input_id explicitly so two datasets with the same "
                 "knobs cannot resume each other's stages"
             )
-        cfg = replace(cfg, input_id="fastq|" + "|".join(names))
-    zipped_raw = zip_fastq(tables)
+        cfg = replace(cfg, input_id="fastq|" + "|".join(ids))
     seq_cols = [c for c in zipped_raw.columns if c.startswith("sequence_")]
     qual_cols = [c.replace("sequence_", "qualities_") for c in seq_cols]
     zipped_raw = zipped_raw.withColumn(

@@ -2,6 +2,7 @@
 pipeline tests (reference O1/O2/O3/O4 + end-to-end)."""
 
 import gzip
+import os
 
 import pytest
 
@@ -243,3 +244,91 @@ def test_deduplicate_fastq_checkpoints_bind_to_input(spark, tmp_path):
     # A at max_distance=1: read1/read2/read4 cluster (Hamming 1, count
     # 2 for ACGTACGT wins), read3 and read5 stand alone
     assert seqs_a == {"ACGTACGT", "TTTTCCCC", "GGGGGGGG"}
+
+
+def test_checkpoint_identity_sees_in_place_overwrite(spark, tmp_path):
+    """binaryFiles names a local file `file:/abs/path` (one slash); the
+    checkpoint identity must still fold in its size and mtime, so a file
+    overwritten in place with different reads and rerun with the same
+    checkpoint_dir recomputes instead of resuming the old stages (which
+    returned no records at all)."""
+    path = tmp_path / "r.fastq"
+    cfg = DedupConfig(checkpoint_dir=str(tmp_path / "ck"), dissection="highest_count")
+    _write_fastq(path, R1)
+    first = deduplicate_fastq(spark, [read_fastq(spark, str(path))], cfg, None, None)
+    assert {r.sequence_0 for r in first.collect()} == {"ACGTACGT", "TTTTCCCC", "GGGGGGGG"}
+    other = [("y1/1", "CATCATCATCAT", "IIIIIIIIIIII"), ("y2/1", "GATGATGATGAT", "IIIIIIIIIIII")]
+    _write_fastq(path, other)
+    second = deduplicate_fastq(spark, [read_fastq(spark, str(path))], cfg, None, None)
+    assert {r.sequence_0 for r in second.collect()} == {"CATCATCATCAT", "GATGATGATGAT"}
+
+
+def test_write_fastq_reads_the_pin_not_the_inputs(spark, tmp_path):
+    """Each input is parsed once and pinned: once deduplicate_fastq has
+    returned, deleting the input files must not change what write_fastq
+    emits."""
+    from fastqdedup_spark.sources.fastq import write_fastq
+
+    cfg = DedupConfig(max_distance=1, dissection="directional")
+    outputs = {}
+    for run in ("kept", "deleted"):
+        ins = [tmp_path / f"{run}_1.fastq", tmp_path / f"{run}_2.fastq"]
+        _write_fastq(ins[0], R1)
+        _write_fastq(ins[1], R2)
+        tables = [read_fastq(spark, str(p)) for p in ins]
+        out = deduplicate_fastq(spark, tables, cfg)
+        if run == "deleted":
+            for p in ins:
+                p.unlink()
+        outs = [str(tmp_path / f"{run}_out{m}.fastq") for m in (1, 2)]
+        assert write_fastq(out, outs) == 3
+        outputs[run] = [open(o, "rb").read() for o in outs]
+    assert outputs["deleted"] == outputs["kept"]
+
+
+def _stage_dirs(ckdir):
+    if not os.path.isdir(ckdir):
+        return []
+    return [
+        os.path.join(base, stage)
+        for base in os.listdir(ckdir)
+        for stage in os.listdir(os.path.join(ckdir, base))
+    ]
+
+
+def test_mate_guard_raises_before_any_checkpoint_stage(spark, tmp_path):
+    """The mate check rides the zip's pin job, so a mismatched pair
+    fails before dedup_keys writes a single durable stage, and reports
+    the lowest bad record_idx."""
+    _write_fastq(tmp_path / "m1.fastq", R1)
+    bad = R2[:2] + [("OTHER/2", "ACGT", "IIII"), ("ALSO_BAD/2", "ACGT", "IIII")] + R2[4:]
+    _write_fastq(tmp_path / "m2.fastq", bad)
+    ckdir = str(tmp_path / "ck")
+    tables = [read_fastq(spark, str(tmp_path / f"m{i}.fastq")) for i in (1, 2)]
+    with pytest.raises(ValueError, match="index 2 are not mates: 'read3/1'"):
+        deduplicate_fastq(spark, tables, DedupConfig(checkpoint_dir=ckdir))
+    assert _stage_dirs(ckdir) == []
+
+
+def test_multi_file_guard_raises_before_the_zip_join(spark, tmp_path):
+    """The one-file-per-table guard rides the offending table's own pin
+    job: with the glob-read table first, exactly one Spark job runs —
+    no second parse, no zip join, no checkpoint stage."""
+    _write_fastq(tmp_path / "g1.fastq", R1[:2])
+    _write_fastq(tmp_path / "g2.fastq", R1[2:4])
+    _write_fastq(tmp_path / "single.fastq", R2[:2])
+    ckdir = str(tmp_path / "ck")
+    tables = [
+        read_fastq(spark, str(tmp_path / "g*.fastq")),
+        read_fastq(spark, str(tmp_path / "single.fastq")),
+    ]
+    sc = spark.sparkContext
+    sc.setJobGroup("multi-file-guard", "multi-file guard")
+    try:
+        with pytest.raises(ValueError, match="multiple files"):
+            deduplicate_fastq(spark, tables, DedupConfig(checkpoint_dir=ckdir))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("multi-file-guard")) == 1
+    assert _stage_dirs(ckdir) == []
