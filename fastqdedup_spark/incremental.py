@@ -22,8 +22,10 @@ against a pure-Python oracle):
   tier 2 (near):   a remaining file whose normalized-content k-gram
                    Jaccard >= threshold against ANY index survivor is
                    dropped — `dropped_near`.
-  tier 3 (batch):  the remainder runs the full batch pipeline
-                   (pipeline.dedup_files) among themselves.
+  tier 3 (batch):  the remainder is clustered among itself by the
+                   batch pipeline's clustering tail
+                   (pipeline.cluster_tail), exactly as dedup_files
+                   clusters a whole corpus.
   kept = tier-3 survivors; with update_index=True their signed state
   and the batch's fingerprints append to the index idempotently.
 
@@ -38,6 +40,15 @@ incremental mode at all (each run rebuilds its trie from scratch,
 graft-only capability mandated by the 100 TB regime, not a port.
 
 100 TB plan shape (the part that must survive 1000 executors):
+- the NEW side is read once, pinned, and signed once: one job filters,
+  hashes and groups the increment by sha into (sha, cnt, content, rep)
+  and pins it (localCheckpoint), observing its size and content
+  fingerprint on the way. Tier 1 probes with the pin's shas, tier 2
+  signs the pin's fresh rows in the batch's ONE Arrow pass, tier 3
+  clusters the pin's remainder with those signatures, and the append
+  writes the pin's shas — none of them goes back to the raw input.
+  Every tier counter (dropped_exact, dropped_near, the remainder's
+  input.files) is observed on the job that pins its tier.
 - the OLD side is never broadcast, never collected, and only ever
   SCANNED: the exact tier streams the fingerprint table once against a
   broadcast of the new batch's shas; the near tier streams the index
@@ -78,13 +89,21 @@ import os
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
+from fastqdedup_spark.checkpoint import StageCheckpointer
 from fastqdedup_spark.config import DedupConfig
 from fastqdedup_spark.functions.minhash import add_signature_columns, normalize_content
-from fastqdedup_spark.functions.quality import content_quality_filter
-from fastqdedup_spark.operators.exact_dedup import with_sha256
-from fastqdedup_spark.pipeline import DedupResult, dedup_files
+from fastqdedup_spark.pipeline import (  # noqa: F401 — dedup_files is re-exported
+    DedupResult,
+    FilesFront,
+    cluster_tail,
+    dedup_files,
+    distinct_stage,
+    files_front,
+    group_contents,
+    prepare_files,
+)
 
 _INDEX_COLS = ["sha", "nid", "content_norm", "n_shingles", "band_hash", "sig_packed"]
 
@@ -107,6 +126,29 @@ def model_hash(cfg: DedupConfig) -> str:
     return hashlib.sha256(json.dumps(fields, sort_keys=True).encode()).hexdigest()[:16]
 
 
+def _stable_input_id(cfg: DedupConfig) -> bool:
+    return bool(cfg.input_id) and "|unfingerprintable|" not in cfg.input_id
+
+
+def _fingerprint_aggs(weight: str | None = None) -> list:
+    """Order-insensitive content fingerprint of a `sha` column: (row
+    count, crc32 sum, min, max). `weight` names a per-row multiplicity
+    column, so a grouped table (sha, cnt) yields the same values as the
+    file rows it stands for."""
+    w = F.col(weight) if weight else F.lit(1)
+    return [
+        F.coalesce(F.sum(w), F.lit(0)).alias("n"),
+        F.sum(F.crc32("sha") * w).alias("s"),
+        F.min("sha").alias("lo"),
+        F.max("sha").alias("hi"),
+    ]
+
+
+def _fingerprint_id(row) -> str:
+    key = f"{row['n']}|{row['s']}|{row['lo']}|{row['hi']}"
+    return hashlib.sha256(key.encode()).hexdigest()[:16]
+
+
 def derived_batch_id(cfg: DedupConfig, files: DataFrame | None = None) -> str:
     """The batch id dedup_files_incremental derives when no explicit id
     is given: from cfg.input_id when set (the pipeline's input
@@ -119,7 +161,9 @@ def derived_batch_id(cfg: DedupConfig, files: DataFrame | None = None) -> str:
     crash-resume contract — the retry of a crashed-after-append run
     derived a fresh id, failed to exclude its own first append, and
     dropped the whole batch as dup_exact. `files` must already carry
-    `sha` (with_sha256).
+    `sha` (with_sha256). dedup_files_incremental computes the same
+    fingerprint inside the job that pins the increment, not with a scan
+    of its own.
 
     A TIMESTAMPED input_id (input_fingerprint's `|unfingerprintable|`
     fallback for remote inputs whose listing failed) is treated as
@@ -128,25 +172,11 @@ def derived_batch_id(cfg: DedupConfig, files: DataFrame | None = None) -> str:
     to prevent (the rerun would dedup the batch against its own
     previous append). Those runs fall through to the content
     fingerprint."""
-    if cfg.input_id and "|unfingerprintable|" not in cfg.input_id:
+    if _stable_input_id(cfg):
         return hashlib.sha256(cfg.input_id.encode()).hexdigest()[:16]
     if files is None:
         raise ValueError("derived_batch_id needs cfg.input_id or the batch itself")
-    row = files.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.crc32("sha")).alias("s"),
-        F.min("sha").alias("lo"),
-        F.max("sha").alias("hi"),
-    ).collect()[0]
-    key = f"{row['n']}|{row['s']}|{row['lo']}|{row['hi']}"
-    return hashlib.sha256(key.encode()).hexdigest()[:16]
-
-
-def _batch_id(files: DataFrame, cfg: DedupConfig, explicit: str | None) -> str:
-    """Deterministic id for an increment: the caller's name when given,
-    else derived_batch_id. Reusing the id makes the append idempotent —
-    a re-run of the same increment skips the write."""
-    return explicit or derived_batch_id(cfg, files)
+    return _fingerprint_id(files.agg(*_fingerprint_aggs()).collect()[0])
 
 
 @dataclass
@@ -394,22 +424,22 @@ def build_index(
     its retained state as increment `batch_id` of a fresh index. Also
     the periodic-recluster path: rebuild into a new `path` from the
     union of store + recent increments to restore global single-linkage."""
-    res = dedup_files(spark, files, cfg, quality=quality, collect_metrics=collect_metrics)
     index = DedupIndex(spark, path, cfg)
-    # res.deduped holds exactly one file row per surviving content
-    # (first-wins rep), so signing it is one Arrow pass over survivors
-    # only — never the full corpus. Fingerprints come from
+    ck = StageCheckpointer(spark, cfg)
+    front = files_front(files, cfg, quality, ck)
+    res = cluster_tail(ck, cfg, front, collect_metrics)
+    # the survivors' signed state is a slice of the pipeline's own
+    # signatures stage — no second Arrow pass. Fingerprints come from
     # res.clusters: one row per DISTINCT quality-passed sha, already
-    # computed by the pipeline's distinct_contents stage — re-deriving
-    # them from `files` would re-scan and re-sha256 the entire corpus
-    # a second time (at 100 TB, the costliest op in the build).
-    surv = res.deduped.groupBy("sha").agg(
-        F.count(F.lit(1)).alias("cnt"), F.first("content").alias("content")
-    )
+    # computed by the distinct_contents stage — re-deriving them from
+    # `files` would re-scan and re-sha256 the entire corpus a second
+    # time (at 100 TB, the costliest op in the build).
     wrote = index.append(
         batch_id,
         fingerprints=res.clusters.select("sha"),
-        signed_survivors=_sign_distinct(surv, cfg, None),
+        signed_survivors=front.signed.join(
+            res.survivors.select(F.col("key").alias("sha")), "sha", "left_semi"
+        ),
     )
     if not wrote:
         # append() no-ops when `batch_id` already completed — correct
@@ -420,14 +450,8 @@ def build_index(
         # stored batch's fingerprints against this run's with the same
         # order-insensitive aggregate derived_batch_id uses (one scan
         # of ONE batch's sha table, never the corpus).
-        def _fp(df: DataFrame) -> tuple:
-            row = df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.crc32("sha")).alias("s"),
-                F.min("sha").alias("lo"),
-                F.max("sha").alias("hi"),
-            ).collect()[0]
-            return (row["n"], row["s"], row["lo"], row["hi"])
+        def _fp(df: DataFrame) -> dict:
+            return df.agg(*_fingerprint_aggs()).collect()[0].asDict()
 
         stored = spark.read.parquet(
             os.path.join(path, "fingerprints", batch_id)
@@ -491,45 +515,66 @@ def dedup_files_incremental(
     appending the batch's retained state when update_index=True."""
     from fastqdedup_spark.operators.verify import verify_pairs_jaccard
 
-    if quality:
-        new_files = content_quality_filter(new_files)
-    new_files = with_sha256(new_files)
+    # the input guard raises here, before any job runs or anything
+    # lands under the index
+    new_files = prepare_files(new_files, quality)
+
+    # -- the pin: the increment is read, filtered, hashed and grouped
+    # ONCE; every tier and the append read this table. The same job
+    # observes the batch's size and its content fingerprint (the
+    # derived batch id), so neither costs a scan of its own.
+    pin_obs = Observation()
+    pin = (
+        group_contents(new_files)
+        .observe(pin_obs, F.count(F.lit(1)).alias("n_batch"),
+                 *_fingerprint_aggs(weight="cnt"))
+        .localCheckpoint(eager=True)
+    )
+    batch_fp = pin_obs.get
+    n_batch, n_files = batch_fp["n_batch"], batch_fp["n"]
     # resolved up front: index reads below EXCLUDE this batch's own
     # previously-appended state, so a resume of a crashed-after-append
     # increment reproduces its first run bit-for-bit
-    bid = _batch_id(new_files, cfg, batch_id)
+    if batch_id:
+        bid = batch_id
+    elif _stable_input_id(cfg):
+        bid = derived_batch_id(cfg)
+    else:
+        bid = _fingerprint_id(batch_fp)
+
+    # EVERY new-side broadcast here is gated on the same knob as the
+    # band join: an increment past incremental_broadcast_max_rows must
+    # not force multi-GB sha tables onto every executor (the hint
+    # overrides Spark's own size guard), so oversized increments let
+    # AQE pick the join strategy instead.
+    broadcast_new = n_batch <= cfg.incremental_broadcast_max_rows
+    bcast = F.broadcast if broadcast_new else (lambda df: df)
 
     # -- tier 1: exact, streaming the old fingerprints ONCE ----------------
     # hits = old shas that reappear in this batch: bounded by the
     # batch's distinct count, so it pins (localCheckpoint) into a small
     # table that both the semi and anti join below can broadcast —
     # without the pin, each consumer would rescan the fingerprint store.
-    #
-    # EVERY new-side broadcast here is gated on the same knob as the
-    # band join: an increment past incremental_broadcast_max_rows must
-    # not force multi-GB sha tables onto every executor (the hint
-    # overrides Spark's own size guard), so oversized increments let
-    # AQE pick the join strategy instead.
-    new_shas = new_files.select("sha").distinct()
-    n_batch = new_shas.count()
-    broadcast_new = n_batch <= cfg.incremental_broadcast_max_rows
-    bcast = F.broadcast if broadcast_new else (lambda df: df)
     hits = (
         index.fingerprints(exclude=bid)
-        .join(bcast(new_shas), "sha", "left_semi")
+        .join(bcast(pin.select("sha")), "sha", "left_semi")
         .localCheckpoint(eager=True)
     )
     dropped_exact = new_files.join(bcast(hits), "sha", "left_semi")
-    fresh_files = new_files.join(bcast(hits), "sha", "left_anti")
+    fresh = pin.join(bcast(hits), "sha", "left_anti")
 
     # -- tier 2: near, streaming the survivor index twice -------------------
     # (bands for candidates, then contents for the candidates' verify;
-    # both against broadcast new-side tables)
-    distinct_new = fresh_files.groupBy("sha").agg(
-        F.count(F.lit(1)).alias("cnt"), F.first("content").alias("content")
+    # both against broadcast new-side tables). This is the batch's ONE
+    # Arrow signing pass: tier 3 and the append reuse it.
+    fresh_obs = Observation()
+    signed_new = (
+        _sign_distinct(fresh, cfg, n_batch)
+        .observe(fresh_obs, F.count(F.lit(1)).alias("n"),
+                 F.coalesce(F.sum("cnt"), F.lit(0)).alias("files"))
+        .localCheckpoint(eager=True)
     )
-    signed_new = _sign_distinct(distinct_new, cfg, n_batch).localCheckpoint(eager=True)
-    n_new = signed_new.count()  # post-checkpoint: a metadata-cheap job
+    n_new, n_fresh_files = fresh_obs.get["n"], fresh_obs.get["files"]
     old_index = index.signed_survivors(exclude=bid)
     cand = cross_candidate_pairs(old_index, signed_new, cfg, broadcast_new)
     # NOT bcast()-gated: this table holds OLD survivor nids hit by the
@@ -556,19 +601,33 @@ def dedup_files_incremental(
         cand, contents, cfg, id_col="nid", skip_est=est_ran,
         approx_rows=n_new, metadata_broadcast=False,
     )
+    near_obs = Observation()
     near_shas = (
         signed_new.join(
             verified.select(F.col("id_b").alias("nid")).distinct(), "nid", "left_semi"
         )
-        .select("sha")
+        .select("sha", "cnt")
+        .observe(near_obs, F.coalesce(F.sum("cnt"), F.lit(0)).alias("files"))
         .localCheckpoint(eager=True)
     )
-    dropped_near = fresh_files.join(bcast(near_shas), "sha", "left_semi")
+    near = bcast(near_shas.select("sha"))
+    dropped_near = new_files.join(near, "sha", "left_semi")
 
     # -- tier 3: within-batch recluster of the remainder --------------------
-    remainder = fresh_files.join(bcast(near_shas), "sha", "left_anti")
-    batch = dedup_files(
-        spark, remainder, cfg, quality=False, collect_metrics=collect_metrics
+    # the batch pipeline's clustering tail over the pin's remainder and
+    # its tier-2 signatures: same stage names as dedup_files, so a
+    # durable checkpoint_dir keeps its layout
+    ck = StageCheckpointer(spark, cfg)
+    distinct, n_distinct, n_remainder_files = distinct_stage(
+        ck, lambda: fresh.join(near, "sha", "left_anti")
+    )
+    signed = ck.stage(
+        "signatures", lambda: signed_new.join(near, "sha", "left_anti")
+    )
+    batch = cluster_tail(
+        ck, cfg,
+        FilesFront(new_files.columns, distinct, signed, n_distinct, n_remainder_files),
+        collect_metrics,
     )
 
     metrics = {
@@ -577,19 +636,16 @@ def dedup_files_incremental(
         **{f"batch.{k}": v for k, v in batch.metrics.items()},
     }
     if collect_metrics:
-        metrics["incremental.dropped_exact"] = float(dropped_exact.count())
-        metrics["incremental.dropped_near"] = float(dropped_near.count())
-        metrics["incremental.kept"] = float(batch.deduped.count())
+        metrics["incremental.dropped_exact"] = float(n_files - n_fresh_files)
+        metrics["incremental.dropped_near"] = float(near_obs.get["files"])
+        metrics["incremental.kept"] = batch.metrics["output.files"]
 
     if update_index:
-        # batch survivors were already signed in signed_new — reuse it
-        # (zero extra Arrow passes; cnt from the batch-distinct agg)
-        surv_signed = signed_new.join(
-            batch.survivors.select(F.col("key").alias("sha")), "sha", "left_semi"
-        )
         index.append(
-            bid, fingerprints=new_files.select("sha").distinct(),
-            signed_survivors=surv_signed,
+            bid, fingerprints=pin.select("sha"),
+            signed_survivors=signed.join(
+                batch.survivors.select(F.col("key").alias("sha")), "sha", "left_semi"
+            ),
         )
 
     return IncrementalResult(batch.deduped, dropped_exact, dropped_near, batch, metrics)

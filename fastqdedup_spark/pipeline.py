@@ -24,9 +24,10 @@ Stage graph (code mode), every arrow a Catalyst-planned exchange:
 from __future__ import annotations
 
 from dataclasses import dataclass, replace
+from typing import Callable
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from fastqdedup_spark.checkpoint import StageCheckpointer, observed
 from fastqdedup_spark.config import DedupConfig
@@ -114,92 +115,115 @@ def dedup_keys(
     return DedupResult(clusters, survivors, deduped, ck.metrics.as_dict(), rounds)
 
 
-def dedup_files(
-    spark: SparkSession,
-    files: DataFrame,
-    cfg: DedupConfig,
-    quality: bool = True,
-    collect_metrics: bool = True,
-) -> DedupResult:
-    """Code-domain near-dup clustering per BASELINE.json north_rule.
-
-    Input: files(id?, repo, path, commit, lang, content). Output keeps
-    the per-row sha256 invariant: `deduped` rows carry the `sha` of
-    their untouched `content` (equality testable end-to-end).
-    """
+def prepare_files(files: DataFrame, quality: bool) -> DataFrame:
+    """The per-row front of every files-table entry point: input guard
+    -> widen -> quality filter -> `sha`. Lazy; the guard raises before
+    any Spark job runs."""
+    from fastqdedup_spark.functions.partitioning import widen_small_input
     from fastqdedup_spark.sources import FILES_COLUMNS
 
     missing = set(FILES_COLUMNS) - set(files.columns)
     if missing:
         raise ValueError(f"files table missing columns: {sorted(missing)}")
-    ck = StageCheckpointer(spark, cfg)
     # a tiny single-row-group input scans as 1-2 partitions, so the
     # quality regexes + sha256 + the distinct stage's partial agg would
     # run near-serially; no-op at real scale / for checkpointed inputs
-    from fastqdedup_spark.functions.partitioning import widen_small_input
-
     files = widen_small_input(files)
     if quality:
         files = content_quality_filter(files)
-    files = with_sha256(files)
+    return with_sha256(files)
 
-    # P9 pre-aggregation: exact duplicates collapse BEFORE signatures,
-    # mirroring the trie's count-in-node (_triemodule.c:233-239). The
-    # first-wins representative (min (repo, path, commit), O13) is
-    # computed in the SAME aggregation so the survivor tail never
-    # rescans the full input. The rep struct carries EVERY non-content
-    # column (orderable types required; repo/path/commit lead, so the
-    # first-wins order is unchanged): the final `deduped` output is
-    # reconstructed from it directly, which both removes a full join
-    # of the corpus and guarantees one output row per surviving sha —
-    # the old join-back on (sha, repo, path, commit) matched every
-    # input copy of the representative row, so a fully-duplicated
-    # input row (two ingestion batches unioned) leaked duplicate
-    # output rows for one distinct content.
+
+def group_contents(files: DataFrame) -> DataFrame:
+    """(sha, cnt, content, rep): one row per distinct content of a
+    `prepare_files` table.
+
+    P9 pre-aggregation: exact duplicates collapse BEFORE signatures,
+    mirroring the trie's count-in-node (_triemodule.c:233-239). The
+    first-wins representative (min (repo, path, commit), O13) is
+    computed in the SAME aggregation so the survivor tail never
+    rescans the full input. The rep struct carries EVERY non-content
+    column (orderable types required; repo/path/commit lead, so the
+    first-wins order is unchanged): the final `deduped` output is
+    reconstructed from it directly, which both removes a full join
+    of the corpus and guarantees one output row per surviving sha —
+    the old join-back on (sha, repo, path, commit) matched every
+    input copy of the representative row, so a fully-duplicated
+    input row (two ingestion batches unioned) leaked duplicate
+    output rows for one distinct content."""
     rep_rest = [
         c for c in files.columns
         if c not in ("repo", "path", "commit", "content", "sha")
     ]
-    # The distinct-contents count sizes two static plan choices below
-    # (est_broadcast gate, Arrow-stage task cap). It rides the stage's
-    # own materialization via Dataset.observe (CollectMetrics fires on
-    # BOTH materialization paths: localCheckpoint is a withAction and
-    # so is the durable parquet write) — zero extra jobs on a fresh
-    # run. A resumed checkpoint knows it from the previous run's
-    # persisted metrics; the count() fallback only remains for a
-    # no-metrics resume, where it is a cheap scan of the materialized
-    # stage (no recompute, no plan barrier).
-    from pyspark.sql import Observation
+    return files.groupBy("sha").agg(
+        F.count(F.lit(1)).alias("cnt"),
+        F.first("content").alias("content"),  # identical per sha
+        F.min(F.struct("repo", "path", "commit", *rep_rest)).alias("rep"),
+    )
 
-    n_obs = Observation()
+
+def distinct_stage(
+    ck: StageCheckpointer, build: Callable[[], DataFrame]
+) -> tuple[DataFrame, int, int]:
+    """The `distinct_contents` stage over `build()`'s (sha, cnt, content,
+    rep) rows, with its row count and Σcnt (the input file rows it
+    stands for).
+
+    Both counts size plan choices or feed metrics, and they ride the
+    stage's own materialization via Dataset.observe (CollectMetrics
+    fires on BOTH materialization paths: localCheckpoint is a
+    withAction and so is the durable parquet write) — zero extra jobs
+    on a fresh run. A resumed checkpoint knows them from the previous
+    run's persisted metrics; the aggregate fallback only remains for a
+    no-metrics resume, where it is a cheap scan of the materialized
+    stage (no recompute, no plan barrier)."""
+    obs = Observation()
+    counts = (
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.sum("cnt"), F.lit(0)).alias("files"),
+    )
     distinct = ck.stage(
         "distinct_contents",
-        lambda: files.groupBy("sha").agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.first("content").alias("content"),  # identical per sha
-            F.min(F.struct("repo", "path", "commit", *rep_rest)).alias("rep"),
-        ).observe(n_obs, F.count(F.lit(1)).alias("n")),
-        # distinct.contents (persisted by a metrics-mode run) rides this
-        # stage's resume: it feeds the est_broadcast auto-gate below
-        reload_metrics=("distinct",),
+        lambda: build().observe(obs, *counts),
+        # distinct.contents and input.files (persisted by a
+        # metrics-mode run) ride this stage's resume
+        reload_metrics=("distinct", "input"),
     )
-    n_distinct = ck.metrics.as_dict().get("distinct.contents")
-    if n_distinct is None:
-        # None iff the stage was resumed, so the observation never ran
-        n_seen = observed(n_obs)
-        if n_seen is not None:
-            n_distinct = n_seen["n"]
-    if n_distinct is None:
-        n_distinct = distinct.count()
-    # AUTO est_broadcast resolution (static per run): past
-    # est_broadcast_max_rows the sketch/size joins must run shuffled (a
-    # forced broadcast there is a driver OOM at >50M distinct
-    # contents). cfg itself stays untouched — config_hash (and so
-    # checkpoint keys) is computed from the user-provided config, not
-    # the resolved plan choice.
-    eff_broadcast = cfg.resolved_est_broadcast(n_distinct)
-    ck.metrics.add("est", "broadcast", float(eff_broadcast))
-    cfg_run = replace(cfg, est_broadcast=eff_broadcast)
+    # None iff the stage was resumed, so the observation never ran
+    seen = observed(obs)
+    if seen is None:
+        persisted = ck.metrics.as_dict()
+        seen = {
+            "n": persisted.get("distinct.contents"),
+            "files": persisted.get("input.files"),
+        }
+    if seen["n"] is None or seen["files"] is None:
+        seen = distinct.agg(*counts).collect()[0].asDict()
+    return distinct, int(seen["n"]), int(seen["files"])
+
+
+@dataclass
+class FilesFront:
+    """What the clustering tail reads: the two front stages and their
+    counts."""
+
+    columns: list[str]    # output row columns (the prepared input's)
+    distinct: DataFrame   # distinct_contents stage: (sha, cnt, content, rep)
+    signed: DataFrame     # signatures stage: sha, cnt, nid + MinHash state
+    n_distinct: int       # rows of `distinct`
+    n_files: int          # Σcnt of `distinct`
+
+
+def files_front(
+    files: DataFrame, cfg: DedupConfig, quality: bool, ck: StageCheckpointer
+) -> FilesFront:
+    """validate -> widen -> quality -> sha -> distinct_contents ->
+    signatures: the stages that hash, group and sign an input. The
+    front's `signed` is the input's only Arrow signing pass, so
+    `build_index` slices the survivors' index state out of it."""
+    files = prepare_files(files, quality)
+    distinct, n_distinct, n_files = distinct_stage(ck, lambda: group_contents(files))
+
     def _build_signatures() -> DataFrame:
         base = distinct
         sig_source = "content"
@@ -226,6 +250,29 @@ def dedup_files(
         ).withColumn("nid", F.unhex(F.substring("sha", 1, 32)))
 
     signed = ck.stage("signatures", _build_signatures)
+    return FilesFront(files.columns, distinct, signed, n_distinct, n_files)
+
+
+def cluster_tail(
+    ck: StageCheckpointer,
+    cfg: DedupConfig,
+    front: FilesFront,
+    collect_metrics: bool,
+) -> DedupResult:
+    """pairs -> edges -> CC -> clusters -> survivors -> deduped (+ the
+    metrics) over a front's stages. `dedup_files` feeds it its own
+    front; the incremental path feeds it the increment's remainder,
+    already hashed, grouped and signed by tiers 1-2."""
+    distinct, signed, n_distinct = front.distinct, front.signed, front.n_distinct
+    # AUTO est_broadcast resolution (static per run): past
+    # est_broadcast_max_rows the sketch/size joins must run shuffled (a
+    # forced broadcast there is a driver OOM at >50M distinct
+    # contents). cfg itself stays untouched — config_hash (and so
+    # checkpoint keys) is computed from the user-provided config, not
+    # the resolved plan choice.
+    eff_broadcast = cfg.resolved_est_broadcast(n_distinct)
+    ck.metrics.add("est", "broadcast", float(eff_broadcast))
+    cfg_run = replace(cfg, est_broadcast=eff_broadcast)
     # candidate generation runs on compact 16-byte binary ids (the first
     # 128 bits of the sha), not 64-char hex shas: the band self-join's
     # output is quadratic in band size and each row carries two ids, so
@@ -355,7 +402,7 @@ def dedup_files(
     # O13 survivor semi-join + first-wins: one surviving FILE per
     # surviving content, deterministic by (repo, path, commit). The
     # representative rides on the distinct_contents stage — no second
-    # full-input aggregation here, and no join back to `files` at all:
+    # full-input aggregation here, and no join back to the input at all:
     # the full row is rebuilt from the rep struct + the stage's
     # content, so row-per-sha uniqueness is aggregation-guaranteed.
     deduped = distinct.join(
@@ -363,7 +410,7 @@ def dedup_files(
     ).select(
         *[
             (F.col("content") if c == "content" else F.col(f"rep.{c}")).alias(c)
-            for c in files.columns
+            for c in front.columns
             if c != "sha"
         ],
         "sha",
@@ -371,9 +418,27 @@ def dedup_files(
     if collect_metrics:
         ck.metrics.add_row("bands", band_metrics.collect()[0].asDict())
         ck.metrics.add("cc", "rounds", rounds)
-        ck.metrics.add("input", "files", files.count())
+        ck.metrics.add("input", "files", front.n_files)
         ck.metrics.add("distinct", "contents", n_distinct)
         ck.metrics.add("edges", "n", edges_nid.count())
         ck.metrics.add("output", "files", deduped.count())
     ck.write_metrics()
     return DedupResult(clusters, survivors, deduped, ck.metrics.as_dict(), rounds)
+
+
+def dedup_files(
+    spark: SparkSession,
+    files: DataFrame,
+    cfg: DedupConfig,
+    quality: bool = True,
+    collect_metrics: bool = True,
+) -> DedupResult:
+    """Code-domain near-dup clustering per BASELINE.json north_rule:
+    `files_front` then `cluster_tail`.
+
+    Input: files(id?, repo, path, commit, lang, content). Output keeps
+    the per-row sha256 invariant: `deduped` rows carry the `sha` of
+    their untouched `content` (equality testable end-to-end).
+    """
+    ck = StageCheckpointer(spark, cfg)
+    return cluster_tail(ck, cfg, files_front(files, cfg, quality, ck), collect_metrics)
