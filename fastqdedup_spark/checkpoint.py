@@ -11,9 +11,16 @@ not in this image, so the same keyed-stage contract is implemented on
 parquet (swap `_write`/`_read` to `writeTo(...)` when the catalog
 exists).
 
+A freshly written stage is read back with the schema of the frame
+that wrote it, so the read-back costs no schema-inference job; a resume
+has no built frame and infers the schema from the parquet footers.
+
 Metrics: each stage appends rows (stage, metric, value) — the analog of
 the reference's trie stats / per-stage timing
 (/root/reference/src/fastqdedup/__init__.py:133-157, 410-412).
+The metrics and lineage tables are built JVM-local
+(`session.local_table`, a `LocalTableScan`), so writing them runs no
+Python worker.
 
 Lineage: every materialized stage also persists a per-partition-file
 fingerprint table (`<base>/_lineage/<stage>`: file, rows, xor/sum-folded
@@ -29,11 +36,13 @@ from __future__ import annotations
 import os
 import time
 from typing import Callable
+from urllib.parse import urlparse
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
 
 from fastqdedup_spark.config import DedupConfig
+from fastqdedup_spark.session import local_table
 
 
 def observed(obs: Observation) -> dict | None:
@@ -83,11 +92,6 @@ class MetricsCollector:
                 out.append((stage, metric, float(v)))
         return out
 
-    def to_df(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(
-            self._resolved(), "stage string, metric string, value double"
-        )
-
     def as_dict(self) -> dict:
         return {f"{s}.{m}": v for s, m, v in self._resolved()}
 
@@ -118,11 +122,13 @@ class StageCheckpointer:
         paths, which silently disabled resume (and lineage verify)
         while still paying every stage write — the north rule's
         "resumable" claim void on exactly the deployments that need
-        it. Local paths keep the cheap os.stat."""
+        it. Local paths keep the cheap os.stat; a `file:` URI is parsed,
+        not prefix-matched, so `file:/abs` (one slash, as Hadoop prints
+        local paths) resumes like `file:///abs`."""
         marker = os.path.join(path, "_SUCCESS")
-        if "://" not in path or path.startswith("file://"):
-            local = marker[len("file://"):] if marker.startswith("file://") else marker
-            return os.path.exists(local)
+        uri = urlparse(marker)
+        if uri.scheme in ("", "file"):
+            return os.path.exists(uri.path if uri.scheme else marker)
         jvm = self.spark._jvm
         p = jvm.org.apache.hadoop.fs.Path(marker)
         fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
@@ -160,8 +166,8 @@ class StageCheckpointer:
 
     def _write_lineage(self, stage: str, df: DataFrame) -> None:
         rows = self._lineage_rows(df)
-        self.spark.createDataFrame(
-            rows, "file string, rows long, xor_fp long, sum_fp long"
+        local_table(
+            self.spark, rows, "file string, rows long, xor_fp long, sum_fp long"
         ).coalesce(1).write.mode("overwrite").parquet(self._lineage_path(stage))
         self.metrics.add(stage, "lineage_files", len(rows))
 
@@ -261,7 +267,7 @@ class StageCheckpointer:
         df = build()
         if self.base:
             df.write.mode("overwrite").parquet(self._path(name))
-            df = self.spark.read.parquet(self._path(name))
+            df = self.spark.read.schema(df.schema).parquet(self._path(name))
             if self.cfg.lineage:
                 self._write_lineage(name, df)
         elif not fuse:
@@ -279,8 +285,8 @@ class StageCheckpointer:
             for stage, metric, value in self.metrics._resolved():
                 dedup[(stage, metric)] = value
             rows = [(s, m, v) for (s, m), v in dedup.items()]
-            self.spark.createDataFrame(
-                rows, "stage string, metric string, value double"
+            local_table(
+                self.spark, rows, "stage string, metric string, value double"
             ).coalesce(1).write.mode("overwrite").parquet(
                 os.path.join(self.base, "_metrics")
             )

@@ -27,6 +27,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from fastqdedup_spark.session import local_table
+
 
 def _driver_union_find(sym: DataFrame) -> DataFrame:
     """Exact CC on the driver for small edge sets: union-find with path
@@ -55,16 +57,13 @@ def _driver_union_find(sym: DataFrame) -> DataFrame:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
     # find() roots are union-by-min, so root == component minimum
-    import pandas as pd
     import pyspark.sql.types as T
 
-    nodes = list(seen)
-    lab_pdf = pd.DataFrame({"id": nodes, "cluster_id": [find(v) for v in nodes]})
     id_type = sym.schema[0].dataType
     schema = T.StructType(
         [T.StructField("id", id_type), T.StructField("cluster_id", id_type)]
     )
-    return sym.sparkSession.createDataFrame(lab_pdf, schema)
+    return local_table(sym.sparkSession, [(v, find(v)) for v in seen], schema)
 
 
 def connected_components(

@@ -22,6 +22,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from fastqdedup_spark.session import local_table
+
 P = 2_147_483_647  # 2^31 - 1, shared with functions/portable.py
 A = 1_103_515_245
 C = 12_345
@@ -57,8 +59,8 @@ def mix_sources(
     its deterministic draw < weight*1e6), independently per row.
     Strata absent from `weights` get `default_weight`. Weight 1.0
     keeps everything in the stratum; 0.0 drops it entirely."""
-    spark = docs.sparkSession
-    w = spark.createDataFrame(
+    w = local_table(
+        docs.sparkSession,
         [(k, int(round(v * PPM))) for k, v in weights.items()],
         f"{stratum_col} string, _ppm long",
     )

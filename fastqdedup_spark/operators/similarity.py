@@ -25,6 +25,7 @@ import pyspark.sql.types as T
 from pyspark.sql import Column, DataFrame, Window
 
 from fastqdedup_spark.functions.partitioning import widen_small_input
+from fastqdedup_spark.session import local_table
 
 
 def cosine_expr(a: str, b: str) -> Column:
@@ -71,8 +72,9 @@ def brute_force_topk(
     if not qrows:
         # np.linalg.norm on a (0,)-shaped array raises AxisError on the
         # driver; an empty query set is an empty result, not a crash
-        return corpus.sparkSession.createDataFrame(
-            [], f"{query_id_col} long, {id_col} long, score double, rank int"
+        return local_table(
+            corpus.sparkSession, [],
+            f"{query_id_col} long, {id_col} long, score double, rank int",
         )
     qids = [r[0] for r in qrows]
     qmat = np.array([r[1] for r in qrows], dtype=np.float64)
