@@ -64,20 +64,10 @@ def argument_parser() -> argparse.ArgumentParser:
                    help="accept sketch-certain candidate pairs without exact "
                         "verification (~3e-3 per-pair false-accept, amplified "
                         "transitively by clustering; off = verify every edge)")
-    p.add_argument("--est-transport", default="carry", choices=["probe", "carry"],
-                   help="how candidate pairs meet their est sketches: probe "
-                        "per-id sketch tables, or carry sig_packed through "
-                        "the band shuffle (zero per-pair hash probes)")
-    p.add_argument("--copartition-pairs", action="store_true",
-                   help="capped band self-joins reuse ONE band_hash "
-                        "exchange for both sides (halves the pair "
-                        "stage's shuffle bytes; for multi-node clusters "
-                        "where the exchange crosses a network — measured "
-                        "~30%% slower on a single box, so off by default)")
     p.add_argument("--est-broadcast", default="auto",
                    choices=["auto", "on", "off"],
-                   help="broadcast sketch/size metadata tables into the "
-                        "candidate/verify joins; auto resolves from the "
+                   help="broadcast the shingle-size and orientation-label "
+                        "tables into the verify joins; auto resolves from the "
                         "resumed distinct-contents count (off past 50M)")
     p.add_argument("--python-stage-partitions", type=int, default=0,
                    help="Arrow/python stage task count (0 = auto: half the "
@@ -211,8 +201,6 @@ def main(argv: list[str] | None = None) -> None:
         max_cluster_bytes=args.max_cluster_bytes,
         strip_boilerplate_frac=args.strip_boilerplate,
         est_autoaccept=args.est_autoaccept,
-        est_transport=args.est_transport,
-        copartition_pairs=args.copartition_pairs,
         est_broadcast={"auto": None, "on": True, "off": False}[args.est_broadcast],
         python_stage_partitions=args.python_stage_partitions,
         checkpoint_dir=args.checkpoint_dir,

@@ -176,7 +176,6 @@ def simhash_bands(df: DataFrame, sig_col: str = "simhash", n_chunks: int = 4) ->
 def simhash_near_dup_pairs(
     df: DataFrame, id_col: str = "id", text_col: str = "text",
     max_hamming: int = 3, portable: bool = False,
-    broadcast_sigs: bool = True, sig_transport: str = "probe",
     band_join_hint: str | None = None,
 ) -> DataFrame:
     """End-to-end SimHash near-dup pair finder: sign -> pigeonhole band
@@ -189,17 +188,13 @@ def simhash_near_dup_pairs(
     pigeonhole chunks are only 7 bits wide, so a 50k-doc corpus floods
     ~90M raw band pairs — the bit_count verify runs BEFORE the pair
     `distinct`, keeping the flood out of the exchange entirely.
-    sig_transport picks the physical form: "probe" (default) joins the
-    raw pairs against per-id signature tables — here the relation is
-    16 B/doc (~1 MB at 50k docs), CACHE-resident, so probes are cheap
-    and carry's fattened bucket streams lose (measured at sf0.1,
-    interleaved: probe 4.4-5.2 s vs carry 13.2 s). "carry" rides the
-    8-byte signature through the band shuffle — the right shape once
-    the signature table exceeds the broadcast ceiling (1e9 docs = 16
-    GB), where DedupConfig.est_transport's measured win applies.
-    Contrast: the minhash est sketch relation is 32 B/doc PACKED
-    (83 MB at 192k files — DRAM-resident), which is why carry wins
-    there and is its default.
+    The raw pairs probe broadcast per-id signature tables: the relation
+    is 16 B/doc (~1 MB at 50k docs), CACHE-resident, so probes are
+    cheap, and carrying the signature through the band shuffle fattens
+    the bucket streams for nothing (measured at sf0.1, interleaved:
+    probe 4.4-5.2 s vs carry 13.2 s; BASELINE.md round 5, "SimHash
+    transport"). The minhash est sketch is the opposite case: 32
+    B/doc packed and DRAM-resident, so operators/lsh.py carries it.
 
     Pigeonhole banding is EXACT, so — like operators/lsh.py's exact
     schemes — oversized bands are never dropped (that silently lost true
@@ -235,35 +230,24 @@ def simhash_near_dup_pairs(
         if band_join_hint is None
         else DedupConfig(band_join_hint=band_join_hint)
     )
-    carry = sig_transport == "carry"
-    band_base = simhash_bands(signed, n_chunks=max_hamming + 1)
-    bands = band_base.select(
-        "nid", "band_hash", *(["simhash"] if carry else [])
+    bands = simhash_bands(signed, n_chunks=max_hamming + 1).select(
+        "nid", "band_hash"
     )
+    sa = signed.select(F.col("nid").alias("id_a"), F.col("simhash").alias("sig_a"))
+    sb = signed.select(F.col("nid").alias("id_b"), F.col("simhash").alias("sig_b"))
 
-    if carry:
-        def verify_inline(raw: DataFrame) -> DataFrame:
-            return raw.withColumn(
-                "hamming", hamming64("simhash_a", "simhash_b")
-            ).filter(F.col("hamming") <= max_hamming)
-    else:
-        hint = F.broadcast if broadcast_sigs else (lambda d: d)
-        sa = signed.select(F.col("nid").alias("id_a"), F.col("simhash").alias("sig_a"))
-        sb = signed.select(F.col("nid").alias("id_b"), F.col("simhash").alias("sig_b"))
-
-        def verify_inline(raw: DataFrame) -> DataFrame:
-            return (
-                raw.join(hint(sa), "id_a")
-                .join(hint(sb), "id_b")
-                .withColumn("hamming", hamming64("sig_a", "sig_b"))
-                .filter(F.col("hamming") <= max_hamming)
-            )
+    def verify_inline(raw: DataFrame) -> DataFrame:
+        return (
+            raw.join(F.broadcast(sa), "id_a")
+            .join(F.broadcast(sb), "id_b")
+            .withColumn("hamming", hamming64("sig_a", "sig_b"))
+            .filter(F.col("hamming") <= max_hamming)
+        )
 
     # hamming is deterministic per pair, so carrying it through the
     # distinct leaves the pair set unchanged
     pairs, _ = _pairs_from_bands(
         bands, "nid", cfg, cap=None, prefilter=verify_inline,
         extra_cols=["hamming"],
-        payload_cols=["simhash"] if carry else None,
     )
     return pairs.select("id_a", "id_b", "hamming")

@@ -78,14 +78,8 @@ def make_jaccard_udf(k: int, cache_cap_bytes: int = 512 << 20):
 
     @F.pandas_udf(T.DoubleType())
     def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        import os as _os
-        import time as _time
-
-        _prof = _os.environ.get("FASTQDEDUP_VERIFY_PROF")
-        _t0 = _time.monotonic()
         both = pd.concat([a.fillna(""), b.fillna("")], ignore_index=True)
         codes, uniques = pd.factorize(both)
-        _t1 = _time.monotonic()
         missing = []
         for u in uniques:
             v = cache.pop(u, None)
@@ -107,7 +101,6 @@ def make_jaccard_udf(k: int, cache_cap_bytes: int = 512 << 20):
                     arr = np.unique(H[starts[i] : starts[i] + counts[i]])
                     cache[missing[lo + i]] = arr
                     cache_bytes[0] += arr.nbytes
-        _t2 = _time.monotonic()
         sets = [cache[u] for u in uniques]
         n = len(a)
         ca, cb = codes[:n], codes[n:]
@@ -133,14 +126,6 @@ def make_jaccard_udf(k: int, cache_cap_bytes: int = 512 << 20):
             for key in list(cache)[: max(len(cache) // 2, 1)]:
                 cache_bytes[0] -= cache[key].nbytes
                 del cache[key]
-        if _prof:
-            _t3 = _time.monotonic()
-            with open(_prof, "a") as f:
-                f.write(
-                    f"{_os.getpid()} n={n} uniq={len(uniques)} "
-                    f"miss={len(missing)} fact={_t1 - _t0:.3f} "
-                    f"shingle={_t2 - _t1:.3f} inter={_t3 - _t2:.3f}\n"
-                )
         return pd.Series(out)
 
     # asNondeterministic = "evaluate exactly once, where declared".
@@ -190,7 +175,7 @@ def est_jaccard_matches(
     2-bit lane is zero iff the bin agreed.
 
     Codegen history (do not relearn — measured, Spark 4.1, 20M pairs x
-    local[8], scripts/codegen_lab.py):
+    local[8]; BASELINE.md round 4):
     - byte-packed sketch, flat 128 comparison terms: the expression
       inlines into the host consume method (bhj_doConsume /
       hashAgg_doAggregateWithoutKey), ~20k generated lines -> janino
@@ -220,58 +205,30 @@ def est_jaccard_matches(
     return (out - F.lit(pad_bins)).cast("int")
 
 
-def est_prefilter(
-    pairs: DataFrame, sigs: DataFrame, cfg: DedupConfig, id_col: str,
-    keep_est: bool = False,
+def est_filter_carried(
+    raw: DataFrame, cfg: DedupConfig, keep_est: bool = False,
 ) -> DataFrame:
     """Estimated-Jaccard pre-filter (JVM-side): the semantic-skew pair
     flood (boilerplate headers -> quadratically many j~0.2 candidates)
-    dies here before any shuffle, content, or Python is touched. The
+    dies here, inside the band-join stage, before the pair distinct's
+    exchange, content, or Python is touched. The
     margin makes false drops statistically negligible (~4.6 sigma at
     j == threshold with 128 bins, P ~ 2e-6); the exact verify UDF keeps
-    precision exact. `sigs` must carry (id_col, sig_packed).
+    precision exact.
 
-    Map-side-ness is the point: with cfg.est_broadcast (default) the
-    sketch table broadcasts EXPLICITLY, so the quadratic raw pair
-    stream is filtered inside the same stage that produced it — it
-    never hits an exchange. The knob is static configuration, not a
-    mid-plan count() (no action, no barrier); beyond ~50M distinct
-    contents flip it off and the joins run shuffled."""
-    hint = F.broadcast if cfg.resolved_est_broadcast() else (lambda df: df)
-    ga = sigs.select(F.col(id_col).alias("id_a"), F.col("sig_packed").alias("sig_a"))
-    gb = sigs.select(F.col(id_col).alias("id_b"), F.col("sig_packed").alias("sig_b"))
+    `raw` already carries `sig_packed_a`/`sig_packed_b` as band-join
+    payload columns, so the filter is a pure streamed-row expression:
+    zero hash probes per raw pair."""
     min_matches = est_min_matches(cfg, cfg.jaccard_threshold - cfg.est_margin)
     # The zero-valued NON-DETERMINISTIC term pins the filter ABOVE the
     # est projection: Catalyst never pushes non-deterministic predicates
     # (and this one is a single comparison, so conjunct-splitting can't
     # peel a deterministic part off), so the est expression is evaluated
-    # in a Project instead of being alias-substituted into the broadcast
-    # join CONDITION (a join condition is generated as ONE inline blob).
+    # in a Project instead of being alias-substituted into a join
+    # CONDITION (a join condition is generated as ONE inline blob).
     # With the 2-bit sketch the expression is small enough that either
     # placement compiles and JITs; the pin stays as cheap insurance
     # against the blob regrowing (e.g. a num_perm bump).
-    nondet_zero = (F.rand(cfg.seed) * F.lit(0.0)).cast("int")
-    out = (
-        pairs.join(hint(ga), "id_a")
-        .join(hint(gb), "id_b")
-        .withColumn("est_matches", est_jaccard_matches(cfg))
-        .filter((F.col("est_matches") + nondet_zero) >= min_matches)
-    )
-    cols = ["id_a", "id_b"] + (["est_matches"] if keep_est else [])
-    return out.select(*cols)
-
-
-def est_filter_carried(
-    raw: DataFrame, cfg: DedupConfig, keep_est: bool = False,
-) -> DataFrame:
-    """est prefilter for cfg.est_transport == "carry": `raw` already
-    carries `sig_packed_a`/`sig_packed_b` as band-join payload columns,
-    so the filter is a pure streamed-row expression — zero hash probes
-    per raw pair (the probe variant pays two random lookups into the
-    sketch relations for every one of the ~60M raw pairs). Same
-    threshold math and the same non-deterministic pushdown pin as
-    est_prefilter."""
-    min_matches = est_min_matches(cfg, cfg.jaccard_threshold - cfg.est_margin)
     nondet_zero = (F.rand(cfg.seed) * F.lit(0.0)).cast("int")
     out = raw.withColumn(
         "est_matches", est_jaccard_matches(cfg, "sig_packed_a", "sig_packed_b")
@@ -317,7 +274,7 @@ def verify_pairs_jaccard(
     normalized content. Returns (id_a, id_b, jaccard).
 
     `metadata_broadcast` overrides cfg.resolved_est_broadcast() for the
-    sketch/size relations derived from `contents`: pass False when the
+    size and orientation-label relations: pass False when the
     caller cannot bound that table (the incremental path's contents
     include index survivors hit by the band join — unbounded by the
     increment's size), so AQE picks the join strategy from the REAL
@@ -329,14 +286,19 @@ def verify_pairs_jaccard(
     Python using the exact bound jaccard(A,B) <= min(|A|,|B|) /
     max(|A|,|B|) — a true upper bound, so the surviving pair set is
     identical, but skewed candidate floods (boilerplate bands) shrink
-    inside whole-stage codegen.
+    inside whole-stage codegen. `skip_est=True` turns that size prune
+    off: pass it when candidate generation already ran the est
+    prefilter (minhash_candidate_pairs with a packed sketch and
+    est_margin > 0), whose survivors are too clean for the bound to
+    earn its two joins back.
 
     The kernel re-shingles content per batch with a per-task cache and
     id_a co-partitioning (see make_jaccard_udf and the packed-kernel
     design note above)."""
     jac = make_jaccard_udf(cfg.shingle_k)
-    # Small per-doc METADATA (sketches, shingle sizes) broadcasts
-    # explicitly under cfg.est_broadcast so pruning happens map-side.
+    # Small per-doc METADATA (shingle sizes, orientation labels)
+    # broadcasts explicitly under cfg.est_broadcast so pruning happens
+    # map-side.
     # The CONTENT table never broadcasts — it exceeds any broadcast
     # budget at real scale and building the broadcast is driver-serial;
     # its join stays a shuffled equi-join on id (the scan-shaped plan
@@ -347,21 +309,15 @@ def verify_pairs_jaccard(
         else metadata_broadcast
     )
     hint = F.broadcast if use_bcast else (lambda df: df)
-    est_ran = skip_est  # upstream candidate generation already filtered
-    if not skip_est and "sig_packed" in contents.columns and cfg.est_margin > 0:
-        pairs = est_prefilter(
-            pairs, contents.select(id_col, "sig_packed"), cfg, id_col
-        )
-        est_ran = True
     # The size bound jaccard(A,B) <= min(|A|,|B|)/max(|A|,|B|) is EXACT,
     # but it only runs when NO est prefilter did: measured at sf0.1 with
-    # the JIT'd 2-bit est in place (scripts/ab_size_prune.py, best-of-2,
+    # the JIT'd 2-bit est in place (best-of-2 A/B for VERDICT r3 #7,
     # prune_off arm under HIGHER external load), its two extra joins
     # cost ~25-30% of the whole q14/docs-pipeline wall (4.18 -> 3.08 s,
     # 7.39 -> 5.68 s) while the est margin already keeps the survivor
     # stream too clean for the bound to earn its joins back.
     have_sizes = (
-        not est_ran and size_col is not None and size_col in contents.columns
+        not skip_est and size_col is not None and size_col in contents.columns
     )
     if have_sizes:
         sa = contents.select(
@@ -398,9 +354,10 @@ def verify_pairs_jaccard(
     # its min id). The legacy (id_a, 4-way id_b salt) key measured a
     # 90% per-task cache MISS rate at 768k files — 1.01M misses for
     # 387k distinct docs — and shingling misses are 90% of verify's
-    # python time (398 of 444 core-s, FASTQDEDUP_VERIFY_PROF). Degree
-    # orientation (higher-degree endpoint as key) was measured first
-    # and is NOT it: -18% misses, wall a wash — cliques have no hubs.
+    # python time (398 of 444 core-s; BASELINE.md round 5, "Verify
+    # locality: hash-min cluster keying"). Degree orientation
+    # (higher-degree endpoint as key) was measured first and is NOT
+    # it: -18% misses, wall a wash — cliques have no hubs.
     # Hash-min keying predicts 397k misses, 2.6% off the ideal. The
     # labels come from the verified pair set itself; the ids-only lazy
     # localCheckpoint pins the upstream band join to a single

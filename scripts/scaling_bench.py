@@ -33,8 +33,8 @@ def child(cores: int, n_files: int, cap: int | None = None) -> None:
     files = generate_files(spark, n_files, seed=42).cache()
     files.count()
     if cap is None:
-        # Arrow/python-stage task cap (scripts/cap_ab.py, BASELINE.md
-        # round 5): each Arrow task is a python worker plus a JVM
+        # Arrow/python-stage task cap (BASELINE.md round 5,
+        # "Python-stage task cap"): each Arrow task is a python worker plus a JVM
         # serialization thread, so cores-many tasks oversubscribe
         # ~1.4x. cores//2 won best-of at width 32 in both load regimes
         # (32.4 vs 44.1 quiet-ish, 35.1 vs 43.7 stormy) and at width 8

@@ -4,8 +4,8 @@ expression, threshold mapping, and recall-neutrality of the filter.
 The est expression must stay O(num_perm/32) nodes — the byte-packed
 128-term ancestor overflowed janino's 64 KB method limit inside the
 broadcast-join consume function and the whole pair stage silently ran
-without whole-stage codegen (VERDICT r3 #1; scripts/codegen_lab.py has
-the measured post-mortem).
+without whole-stage codegen (VERDICT r3 #1; BASELINE.md round 4 has the
+measured post-mortem).
 """
 
 import numpy as np
@@ -16,9 +16,10 @@ from fastqdedup_spark.config import DedupConfig
 from fastqdedup_spark.functions.minhash import minhash_batch
 from fastqdedup_spark.operators.verify import (
     est_bin_match_prob,
+    est_filter_carried,
     est_jaccard_matches,
     est_min_matches,
-    est_prefilter,
+    verify_pairs_jaccard,
 )
 
 
@@ -78,16 +79,20 @@ def test_prefilter_keeps_true_pairs_drops_background(spark):
     texts = base + near
     sig = minhash_batch(texts, cfg.shingle_k, cfg.num_perm, cfg.seed)
     packed = _pack_2bit(sig, cfg.num_perm)
-    sigs = spark.createDataFrame(
-        [(i, packed[i].tolist()) for i in range(len(texts))],
-        "id long, sig_packed array<bigint>",
-    )
     true_pairs = [(i, i + 20) for i in range(20)]
     bg_pairs = [(i, j) for i in range(20) for j in range(i + 1, 20)]
-    pairs = spark.createDataFrame(true_pairs + bg_pairs, "id_a long, id_b long")
+    # raw band-join rows: both sketches ride the row as payload columns
+    raw = spark.createDataFrame(
+        [
+            (a, b, packed[a].tolist(), packed[b].tolist())
+            for a, b in true_pairs + bg_pairs
+        ],
+        "id_a long, id_b long, sig_packed_a array<bigint>, "
+        "sig_packed_b array<bigint>",
+    )
     kept = {
         (r["id_a"], r["id_b"])
-        for r in est_prefilter(pairs, sigs, cfg, "id").collect()
+        for r in est_filter_carried(raw, cfg).collect()
     }
     assert set(true_pairs) <= kept
     assert not (set(bg_pairs) & kept)
@@ -110,10 +115,13 @@ def test_est_broadcast_auto_resolution():
 
 def test_est_broadcast_off_plans_shuffled_joins(spark):
     """est_broadcast=False must remove every BroadcastExchange from the
-    prefilter plan (the >50M-distinct-contents shape: sketch joins run
-    as shuffled equi-joins instead of a driver-OOM broadcast)."""
-    rows = [(i, [0, 0, 0, 0]) for i in range(8)]
-    sigs = spark.createDataFrame(rows, "id long, sig_packed array<bigint>")
+    verify plan's metadata joins (the >50M-distinct-contents shape: the
+    shingle-size relations join shuffled instead of a driver-OOM
+    broadcast). est_margin=0 is the case where the size prune runs."""
+    contents = spark.createDataFrame(
+        [(i, f"doc {i} alpha beta", 3) for i in range(8)],
+        "id long, content_norm string, n_shingles int",
+    )
     pairs = spark.createDataFrame(
         [(a, a + 1) for a in range(7)], "id_a long, id_b long"
     )
@@ -123,50 +131,55 @@ def test_est_broadcast_off_plans_shuffled_joins(spark):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        on = est_prefilter(pairs, sigs, DedupConfig(est_broadcast=True), "id")
-        off = est_prefilter(pairs, sigs, DedupConfig(est_broadcast=False), "id")
-        on_plan = on._jdf.queryExecution().executedPlan().toString()
-        off_plan = off._jdf.queryExecution().executedPlan().toString()
+        plans = {}
+        for bcast in (True, False):
+            cfg = DedupConfig(shingle_k=3, est_margin=0.0, est_broadcast=bcast)
+            out = verify_pairs_jaccard(pairs, contents, cfg, id_col="id")
+            plans[bcast] = out._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert "BroadcastExchange" in on_plan
-    assert "BroadcastExchange" not in off_plan
+    assert "BroadcastExchange" in plans[True]
+    assert "BroadcastExchange" not in plans[False]
 
 
-def test_carry_transport_matches_probe(spark):
-    """est_transport="carry" (sketch rides the band shuffle) must yield
-    the IDENTICAL candidate pair set and est_matches values as "probe"
-    (sketch joined per id) — transport is a physical choice only."""
+def _signed_corpus(spark, cfg, n_files, seed):
     from fastqdedup_spark.corpus import generate_files
     from fastqdedup_spark.functions.minhash import (
         add_signature_columns,
         normalize_content,
     )
     from fastqdedup_spark.operators.exact_dedup import with_sha256
-    from fastqdedup_spark.operators.lsh import minhash_candidate_pairs
 
-    files = generate_files(spark, 800, seed=11)
     distinct = (
-        with_sha256(files)
+        with_sha256(generate_files(spark, n_files, seed=seed))
         .groupBy("sha")
         .agg(F.first("content").alias("content"))
         .withColumn("content_norm", normalize_content("content"))
         .select("sha", "content_norm")
     )
-    base = DedupConfig(shingle_k=7, num_perm=128, bands=32, jaccard_threshold=0.6)
-    signed = add_signature_columns(distinct, base).localCheckpoint(eager=True)
-    got = {}
-    for mode in ("probe", "carry"):
-        cfg = DedupConfig(
-            shingle_k=7, num_perm=128, bands=32, jaccard_threshold=0.6,
-            est_transport=mode,
-        )
-        pairs, _ = minhash_candidate_pairs(signed, cfg, id_col="sha", keep_est=True)
-        got[mode] = sorted(
-            (r.id_a, r.id_b, r.est_matches) for r in pairs.collect()
-        )
-    assert len(got["probe"]) > 0
-    assert got["probe"] == got["carry"]
+    return add_signature_columns(distinct, cfg).localCheckpoint(eager=True)
+
+
+def test_carried_est_matches_equal_numpy_lane_count(spark):
+    """keep_est=True: the est_matches carried through the pair distinct
+    equals, for every candidate pair, the number of 2-bit sketch lanes
+    on which the two packed sketches agree (counted in numpy, lane by
+    lane, from the signed table)."""
+    from fastqdedup_spark.operators.lsh import minhash_candidate_pairs
+
+    cfg = DedupConfig(shingle_k=7, num_perm=128, bands=32, jaccard_threshold=0.6)
+    signed = _signed_corpus(spark, cfg, 800, seed=11)
+    lanes = {}
+    shifts = np.uint64(2) * np.arange(32, dtype=np.uint64)
+    for r in signed.select("sha", "sig_packed").collect():
+        words = np.array(r["sig_packed"], dtype=np.int64).view(np.uint64)
+        lanes[r["sha"]] = ((words[:, None] >> shifts) & np.uint64(3)).ravel()
+    pairs, _ = minhash_candidate_pairs(signed, cfg, id_col="sha", keep_est=True)
+    rows = pairs.collect()
+    assert rows
+    for r in rows:
+        agree = lanes[r.id_a][: cfg.num_perm] == lanes[r.id_b][: cfg.num_perm]
+        assert r.est_matches == int(np.count_nonzero(agree)), (r.id_a, r.id_b)
 
 
 def test_decoupled_band_bins_keeps_recall_and_shrinks_margin(spark):
@@ -176,13 +189,7 @@ def test_decoupled_band_bins_keeps_recall_and_shrinks_margin(spark):
     prefilter margin can shrink to 0.141 at the same false-drop
     probability. The tightened prefilter must still keep every
     candidate whose TRUE jaccard clears the threshold."""
-    from fastqdedup_spark.corpus import generate_files
-    from fastqdedup_spark.functions.minhash import (
-        add_signature_columns,
-        normalize_content,
-        shingle_set,
-    )
-    from fastqdedup_spark.operators.exact_dedup import with_sha256
+    from fastqdedup_spark.functions.minhash import shingle_set
     from fastqdedup_spark.operators.lsh import minhash_candidate_pairs
 
     cfg = DedupConfig(
@@ -190,15 +197,7 @@ def test_decoupled_band_bins_keeps_recall_and_shrinks_margin(spark):
         jaccard_threshold=0.6, est_margin=0.141,
     )
     assert cfg.rows_per_band == 4  # np128's structure, not 256/32=8
-    files = generate_files(spark, 800, seed=13)
-    distinct = (
-        with_sha256(files)
-        .groupBy("sha")
-        .agg(F.first("content").alias("content"))
-        .withColumn("content_norm", normalize_content("content"))
-        .select("sha", "content_norm")
-    )
-    signed = add_signature_columns(distinct, cfg).localCheckpoint(eager=True)
+    signed = _signed_corpus(spark, cfg, 800, seed=13)
     row = signed.select("band_hash", "sig_packed").first()
     assert len(row["band_hash"]) == 32
     assert len(row["sig_packed"]) == 256 // 32
@@ -225,7 +224,7 @@ def test_decoupled_band_bins_keeps_recall_and_shrinks_margin(spark):
 
 
 def test_margin_zero_drops_carried_sketch_from_band_plan(spark):
-    """est_margin=0 disables the prefilter, so the carry transport must
+    """est_margin=0 disables the prefilter, so candidate generation must
     NOT ship the 8-long sketch through the band exchange (a ~2.3x
     fattening nothing reads). The executed plan's band explode should
     carry sig_packed only when the prefilter will consume it."""
@@ -249,7 +248,7 @@ def test_margin_zero_drops_carried_sketch_from_band_plan(spark):
     def band_plan(margin):
         cfg = DedupConfig(
             shingle_k=7, num_perm=128, bands=32, jaccard_threshold=0.6,
-            est_transport="carry", est_margin=margin,
+            est_margin=margin,
         )
         signed = add_signature_columns(distinct, cfg)
         pairs, _ = minhash_candidate_pairs(signed, cfg, id_col="sha")

@@ -130,6 +130,48 @@ def test_resume_without_persisted_metrics(spark, corpus, tmp_path_factory):
     assert r2.metrics["distinct_contents.resumed"] == 1.0
 
 
+def test_est_autoaccept_same_survivors_through_the_split(
+    spark, tmp_path_factory, monkeypatch
+):
+    """est_autoaccept=True on the 200-file fixture keeps the default
+    run's survivor sha set, and really takes the certain/borderline
+    split: the durable `pairs` stage carries est_matches, and the exact
+    verify receives only the borderline pairs (est_matches below the
+    certain line), fewer than the stage holds."""
+    import os
+    from dataclasses import replace
+
+    import fastqdedup_spark.pipeline as pipeline
+    from fastqdedup_spark.operators.verify import est_min_matches
+
+    files = generate_files(spark, 200, seed=3).cache()
+    default = dedup_files(spark, files, CFG)
+    want = sorted(r.sha for r in default.deduped.select("sha").collect())
+
+    verified_in = []
+    real_verify = pipeline.verify_pairs_jaccard
+
+    def counting_verify(pairs, *args, **kwargs):
+        verified_in.append(pairs.count())
+        return real_verify(pairs, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "verify_pairs_jaccard", counting_verify)
+    ckdir = str(tmp_path_factory.mktemp("ck_autoaccept"))
+    cfg = replace(CFG, est_autoaccept=True, checkpoint_dir=ckdir)
+    auto = dedup_files(spark, files, cfg)
+    assert sorted(r.sha for r in auto.deduped.select("sha").collect()) == want
+
+    pairs = spark.read.parquet(os.path.join(ckdir, cfg.config_hash(), "pairs"))
+    assert "est_matches" in pairs.columns
+    hi = min(
+        est_min_matches(cfg, cfg.jaccard_threshold + cfg.est_margin) + 1,
+        cfg.num_perm,
+    )
+    borderline = pairs.filter(F.col("est_matches") < hi).count()
+    assert verified_in == [borderline]
+    assert borderline < pairs.count()
+
+
 def test_est_broadcast_autogate_flips_on_resumed_count(spark, corpus, tmp_path_factory):
     """The est_broadcast AUTO gate (VERDICT r4 #7): a resume whose
     persisted distinct.contents metric exceeds est_broadcast_max_rows

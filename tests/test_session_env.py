@@ -8,6 +8,9 @@ driver script launched from OUTSIDE the repo (e.g. `python
 /root/repo/bench.py` with cwd=/tmp and no PYTHONPATH) died on its
 first UDF task with ModuleNotFoundError; get_spark now exports the
 package root on PYTHONPATH before the gateway JVM spawns.
+
+The session it builds must also leave Spark's co-partitioning rule at
+its default.
 """
 
 import os
@@ -46,3 +49,18 @@ def test_udf_job_from_foreign_cwd(tmp_path):
     )
     assert proc.returncode == 0, f"driver failed:\n{proc.stderr[-3000:]}"
     assert "WORKER_IMPORT_OK" in proc.stdout
+
+
+def test_session_keeps_default_copartition_rule(spark):
+    """get_spark leaves spark.sql.requireAllClusterKeysForCoPartition at
+    Spark's default: no engine plan needs a child partitioned on a
+    subset of the join keys to count as co-partitioned, and a
+    session-wide override would change the plans of every later join
+    in the caller's session."""
+    key = "spark.sql.requireAllClusterKeysForCoPartition"
+    assert key not in dict(spark.sparkContext.getConf().getAll())
+    default = (
+        spark._jvm.org.apache.spark.sql.internal.SQLConf
+        .REQUIRE_ALL_CLUSTER_KEYS_FOR_CO_PARTITION().defaultValueString()
+    )
+    assert spark.conf.get(key) == default == "true"
